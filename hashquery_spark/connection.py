@@ -10,6 +10,13 @@ in-memory connection with registered frames/files
 Scale notes: readers go through ``spark.read`` so Catalyst gets partition
 pruning / predicate pushdown on parquet scans for free. ``register_*``
 never materializes data on the driver.
+
+Bring-your-own sessions: ``default_session`` sizes Spark's generated-code
+cache (``spark.sql.codegen.cache.maxEntries``) to the query surface's
+working set. That is a *static* conf, read once when the JVM's first
+session starts; ``Connection(spark)`` cannot change it afterwards. A caller
+who builds their own session must set it on the builder, or every pass
+over more than 100 distinct query stages recompiles each stage.
 """
 
 from __future__ import annotations
@@ -25,7 +32,17 @@ def default_session(app_name: str = "hashquery_spark", cpus: Optional[int] = Non
 
     On a real cluster callers pass their own session; these configs are the
     local-mode equivalents of sane cluster defaults (AQE on, sensible
-    shuffle partition count)."""
+    shuffle partition count). The codegen cache cap and the debugging switch
+    below are not local-mode settings; they apply the same on a cluster.
+
+    ``spark.python.sql.dataFrameDebugging.enabled=false`` stops PySpark from
+    recording a Python call site for every Column/DataFrame API call (about
+    8 py4j round trips per ``F.col``/``F.lit``/``F.when``). What is given up:
+    runtime errors (ANSI overflow, divide by zero, cast failures) no longer
+    name the Python ``file:line`` that built the failing expression. At the
+    default depth of one frame that line is always inside hashquery_spark,
+    never the caller's code. PySpark caches the switch per process on first
+    use, so it cannot be turned back on in a running process."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
@@ -45,6 +62,16 @@ def default_session(app_name: str = "hashquery_spark", cpus: Optional[int] = Non
         # them as raw int64 nanos, then register_parquet casts back to
         # timestamps losslessly (integer DIV, no double roundtrip)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Whole-stage codegen keeps compiled classes in an LRU of 100 by
+        # default. One cold pass over all 290 queries() entries at sf0.001
+        # compiles 3,687 distinct classes and a second pass 124; at the
+        # default cap both passes compile ~5,500, because every repeated
+        # stage was evicted and is recompiled in Janino (pinned by
+        # tests/test_plans.py::test_repeated_queries_reuse_generated_code).
+        # The price is metaspace: 217 vs 187 MB after one such pass. Static
+        # conf: fixed when the JVM's first session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

@@ -997,3 +997,43 @@ def test_pq_search_with_memoized_build_runs_zero_build_jobs(spark, sf_dir):
     assert len(tracker.getJobIdsForGroup()) == jobs_before, (
         "repeat-search construction launched build jobs"
     )
+
+
+# the bi_semantic benchmark workload's ten Model queries
+_BI_QUERIES = (
+    "scan_filter_sort_limit", "join_one_left", "in_subquery", "funnel",
+    "match_steps_detail", "tpch_q1", "tpch_q8", "timeseries_rollup",
+    "retention_curve", "scd2_build",
+)
+
+
+def test_repeated_queries_reuse_generated_code(spark, sf_dir):
+    """default_session sizes the whole-stage-codegen cache to the query
+    working set. At Spark's default cap of 100 classes, one round of these
+    ten queries needs ~150, so the LRU evicts each class before its query
+    comes round again and every repeat recompiles every stage in Janino
+    (measured 154 / 150 / 150 compiles per round; 153 / 0 / 0 with the
+    cap). AQE replanning can add a few stray compiles to a repeat, so the
+    pin is a fraction, not zero. Counts Janino compiles, not wall time. The
+    cache is cleared first so round 1 is cold whatever earlier tests in
+    this session compiled."""
+    from hashquery_spark import RunResults
+
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    cache_field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    cache_field.setAccessible(True)
+    cache_field.get(None).invalidateAll()
+
+    queries = entry_mod.queries()
+    per_round = []
+    for _ in range(3):
+        before = compiles.getCount()
+        for name in _BI_QUERIES:
+            assert len(RunResults(queries[name](spark, sf_dir)).df) > 0, name
+        per_round.append(compiles.getCount() - before)
+    cold, *warm = per_round
+    assert cold > 4 * len(_BI_QUERIES), per_round
+    assert all(n < 0.25 * cold for n in warm), per_round
